@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types._
 import scala.collection.concurrent.TrieMap
 
 /** Table catalog over the driver-generated parquet corpus.
@@ -15,25 +17,46 @@ import scala.collection.concurrent.TrieMap
   * At cluster scale the same API reads a partitioned directory tree
   * (PARTITION BY date-ish expr → hive-style dirs), so nothing here is
   * local-mode specific.
+  *
+  * Each table is resolved once per session, like an `IStorage` looked up
+  * once: the footer schema is inferred on a session's first read of
+  * (dir, table) and reused while the path's modification time and length
+  * are unchanged, so a warm `load` launches no Spark job. The record is
+  * weakly keyed by the session and dies with it.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Remember the last dir registered per session so repeated query
-  // invocations don't re-derive schemas from footers; a dir change (rare:
-  // tests, sf switches) re-registers everything.
-  private val lastDir = TrieMap.empty[String, String]
+  /** What one session has resolved: the dir its temp views were
+    * registered from, and per (dir, table) the schema read from the
+    * table's parquet footer, stamped with the path's modification time and
+    * length. Only session-free values live here — a DataFrame would hold
+    * its session and pin the weak key below. */
+  private final class Resolved {
+    @volatile var dir: String = _
+    val schemas = TrieMap.empty[(String, String), ((Long, Long), StructType)]
+  }
 
-  /** Register every corpus table of `dir` as a temp view (idempotent).
+  // Weak keys: a session's record is dropped with the session, so nothing
+  // here outlives it or grows JVM-wide.
+  private val resolved = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, Resolved]())
+
+  private def record(spark: SparkSession): Resolved =
+    resolved.computeIfAbsent(spark, _ => new Resolved)
+
+  /** Register every corpus table of `dir` as a temp view (idempotent per
+    * session: a repeat call with the same dir does nothing, a dir change —
+    * rare: tests, sf switches — re-registers everything).
     * Fault-isolated per table: a single unreadable/drifted file must not
     * take the whole catalog down (the reference likewise fails per-table,
     * not per-catalog — src/Interpreters/DatabaseCatalog.cpp load loop).
     */
   def register(spark: SparkSession, dir: String): Unit = {
-    val sessionKey = spark.sparkContext.applicationId + "#" + spark.hashCode()
-    if (!lastDir.get(sessionKey).contains(dir)) {
+    val rec = record(spark)
+    if (rec.dir != dir) {
       val failures = names.flatMap { n =>
         try {
           load(spark, dir, n).createOrReplaceTempView(n)
@@ -44,15 +67,36 @@ object Tables {
             Some(n)
         }
       }
-      if (failures.isEmpty) lastDir(sessionKey) = dir // degraded → retry next call
+      if (failures.isEmpty) rec.dir = dir // degraded → retry next call
       else System.err.println(
         s"[graft.Tables] degraded catalog, missing: ${failures.mkString(",")}")
     }
   }
 
+  /** The table file at `dir`, read fresh (the file list is re-listed on
+    * every call). The footer schema is resolved once per session — the
+    * first call, normally from `register`, runs Spark's schema-inference
+    * job; later calls pass the remembered schema and launch no job. A
+    * rewritten file carries a new stamp and is resolved again. Never the
+    * registered view: a dialect `CREATE TABLE <name>` may replace it. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") loadEvents(spark, s"$dir/events.parquet")
-    else spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val events = name == "events"
+    // the events branch needs this before the footer is read (see loadEvents)
+    if (events) spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val stamp =
+      try {
+        val p = new Path(path)
+        val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileStatus(p)
+        Some((st.getModificationTime, st.getLen))
+      } catch { case _: java.io.IOException => None } // spark.read reports it
+    val schemas = record(spark).schemas
+    val known = schemas.get((dir, name))
+      .collect { case (s, schema) if stamp.contains(s) => schema }
+    val raw = known.fold(spark.read)(spark.read.schema(_)).parquet(path)
+    if (known.isEmpty) stamp.foreach(s => schemas((dir, name)) = (s, raw.schema))
+    if (events) loadEvents(raw) else raw
   }
 
   /** Schema-adaptive events read. The corpus has shipped `ts` both as
@@ -62,13 +106,10 @@ object Tables {
     * the reference re-derives per-file physical types on every read
     * (src/Formats/SchemaInferenceUtils.h, MergeTreeData.cpp header checks).
     */
-  private def loadEvents(spark: SparkSession, path: String): DataFrame = {
+  private def loadEvents(raw: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
     // With nanosAsLong set, a NANOS file reads ts as LongType while a
     // MICROS file is unaffected (reads as timestamp). Branch on the result.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(path)
     raw.schema("ts").dataType match {
       case LongType =>
         // Raw nanos: truncate to micros — the same ns→µs truncation DuckDB

@@ -19,39 +19,40 @@ import org.apache.spark.sql.functions._
 object ScaleOps {
 
   /** Guide §2.5 "input skew — one huge unsplittable file": repartition
-    * immediately after the read WHEN the input is too small to feed every
-    * core at the configured split size. The local corpus writes each table
-    * as a SINGLE parquet row group, so no split configuration can
-    * parallelize the scan — every map-side operator fused into the scan
-    * stage (partial aggregation, projection, window prep) runs on ONE task
-    * (measured: q1's 600k-row decimal partial agg at 1.4s single-task vs
-    * 0.5s fanned out). The probe is pure file metadata — no job, no stat
-    * calls when the file count alone proves the scan wide enough.
+    * immediately after the read to the number of splits Spark itself would
+    * cut the input into. The local corpus writes each table as a SINGLE
+    * parquet row group, so however many splits the scan gets, only the one
+    * holding the row group reads rows — every map-side operator fused into
+    * the scan stage (partial aggregation, projection, window prep) runs on
+    * ONE task (measured: q1's 600k-row decimal partial agg at 1.4s
+    * single-task vs 0.5s fanned out).
     *
-    * Scale-adaptive by construction: fans out ONLY when
-    * inputBytes < cores × maxPartitionBytes (the scan cannot occupy the
-    * cores even at the configured split size). At cluster scale the
-    * condition is false and this is the identity — zero added exchanges,
-    * the plan is unchanged. Hash-partitions on `keys` when given (keeps
-    * the fan-out deterministic under task retry — guide §2.5 warns against
-    * rand-derived keys); round-robin otherwise. */
+    * Sized with Spark's own split rule, `FilePartition.maxSplitBytes`:
+    * maxSplit = min(maxPartitionBytes, max(openCostInBytes,
+    * (bytes + files × openCostInBytes) / cores)), and the input is
+    * repartitioned to ceil(bytes / maxSplit) only when that is more than
+    * its file count. So an input below one split (sf0.01 lineitem, 1 MB,
+    * under the 4 MB open cost) stays as it is — a full-row exchange would
+    * cost more than one task saves — and at cluster scale, where files
+    * already cover the splits, this is the identity too. The probe is the
+    * relation's cached file listing — no job, no stat calls. Hash-partitions
+    * on `keys` when given (keeps the fan-out deterministic under task retry
+    * — guide §2.5 warns against rand-derived keys); round-robin otherwise. */
   def fanOutIfTiny(df: DataFrame, keys: org.apache.spark.sql.Column*)
       : DataFrame = {
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val files = df.inputFiles
-    if (files.length >= cores) return df
-    val conf = spark.sparkContext.hadoopConfiguration
-    val bytes = files.map { f =>
-      val p = new org.apache.hadoop.fs.Path(f)
-      try p.getFileSystem(conf).getFileStatus(p).getLen
-      catch { case _: java.io.IOException => return df }
-    }.sum
-    val maxPB = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-      spark.conf.get("spark.sql.files.maxPartitionBytes", "128m"))
-    if (bytes >= cores * maxPB) df
-    else if (keys.isEmpty) df.repartition(cores)
-    else df.repartition(cores, keys: _*)
+    import org.apache.spark.sql.execution.datasources._
+    val dirs = df.queryExecution.analyzed.collect {
+      case r: LogicalRelation => r.relation
+    }.collect { case h: HadoopFsRelation => h.location.listFiles(Nil, Nil) }
+      .flatten
+    val files = dirs.map(_.files.length).sum
+    val bytes = dirs.flatMap(_.files).map(_.getLen).sum
+    if (bytes == 0) return df
+    val maxSplit = FilePartition.maxSplitBytes(df.sparkSession, dirs)
+    val splits = ((bytes + maxSplit - 1) / maxSplit).toInt
+    if (splits <= files) df
+    else if (keys.isEmpty) df.repartition(splits)
+    else df.repartition(splits, keys: _*)
   }
 
   /** Join a skewed fact side to a dimension, salting the fact's key space

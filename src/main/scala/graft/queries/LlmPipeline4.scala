@@ -38,11 +38,14 @@ object LlmPipeline4 extends QueryPack {
         TRUE AS tokens_ge_pretokens,
         TRUE AS tokens_lt_chars
       FROM p""") { (s, dir) =>
-      // Round-17: fan out the single-row-group scan (guide §2.5) — the
-      // encode/decode/tokenCount kernels below are per-row codegen over
-      // every document and otherwise run on the one scan task.
-      val docs = graft.operators.ScaleOps.fanOutIfTiny(
-        Tables.load(s, dir, "documents"), col("doc_id"))
+      // Spread the documents over every core: the encode/decode/
+      // tokenCount kernels below are per-row CPU work over every document
+      // and otherwise run on the one scan task. fanOutIfTiny sizes by
+      // bytes, and at sf0.1 the 0.6 MB file is below one split, so it
+      // would leave the scan single-task (measured at sf0.1, 4 cores:
+      // 1.46-1.57 s single-task vs 0.92-1.32 s fanned out, min of 5).
+      val docs = Tables.load(s, dir, "documents")
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       val merges = graft.operators.BpeTokenizer.train(docs, "text", 200)
       val pre = graft.operators.BpeTokenizer.pretokens(col("text"))
       val m = docs.select(

@@ -894,12 +894,43 @@ object ClickHouseSql {
           case Some(o) => (inner.substring(0, o.start), o.group(1).trim)
           case None => (inner, keys)
         }
+        // A key or sort item naming a core output column (a select alias,
+        // a selected column, anything under `*`) resolves in the wrapper —
+        // ClickHouse resolves aliases first. Any other item, e.g. a FROM
+        // column the select list leaves out, is computed inside the core
+        // as a hidden __lb_<i> column, where the FROM scope is visible,
+        // and dropped with __lb_rn.
+        val selEnd = depth0Find(core, "SELECT", 0).map(_._2).getOrElse(0)
+        val fromAt = depth0Index(core, "FROM", selEnd)
+        val selectList = splitTopLevel(
+          core.substring(selEnd, if (fromAt < 0) core.length else fromAt)
+            .replaceFirst("(?is)^\\s*DISTINCT\\b", ""))
+        val ident = "[A-Za-z_][A-Za-z0-9_]*"
+        val named = s"(?is)(?:.*\\s+AS\\s+|(?:$ident\\.)*)($ident)".r
+        val outputs = selectList.collect { case named(c) => c.toLowerCase }.toSet
+        val star = selectList.exists(_.endsWith("*"))
+        val hidden = scala.collection.mutable.LinkedHashMap.empty[String, String]
+        def ref(e: String): String =
+          if (e.matches(ident) && (star || outputs(e.toLowerCase))) e
+          else hidden.getOrElseUpdate(e, s"__lb_${hidden.size}")
+        val sortItem =
+          "(?is)(.*?)((?:\\s+(?:ASC|DESC))?(?:\\s+NULLS\\s+(?:FIRST|LAST))?)".r
+        val part = splitTopLevel(keys).map(ref).mkString(", ")
+        val sortSpec = splitTopLevel(order).map {
+          case sortItem(e, d) => ref(e.trim) + d
+        }.mkString(", ")
+        val extra = hidden.map { case (e, a) => s"$e AS $a" }.mkString(", ")
+        val core2 =
+          if (hidden.isEmpty) core
+          else if (fromAt < 0) s"${core.trim}, $extra"
+          else s"${core.substring(0, fromAt).trim}, $extra ${core.substring(fromAt)}"
         val pred =
           if (off == 0L) s"__lb_rn <= $n"
           else s"__lb_rn BETWEEN ${off + 1} AND ${off + n.toLong}"
-        s"SELECT * EXCEPT (__lb_rn) FROM (SELECT *, " +
-          s"row_number() OVER (PARTITION BY $keys ORDER BY $order) AS __lb_rn " +
-          s"FROM ($core)) WHERE $pred ORDER BY $keys, $order$outerLimit"
+        val drop = ("__lb_rn" +: hidden.values.toSeq).mkString(", ")
+        s"SELECT * EXCEPT ($drop) FROM (SELECT *, " +
+          s"row_number() OVER (PARTITION BY $part ORDER BY $sortSpec) AS __lb_rn " +
+          s"FROM ($core2)) WHERE $pred ORDER BY $part, $sortSpec$outerLimit"
     }
   }
 

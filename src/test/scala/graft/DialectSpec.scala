@@ -234,4 +234,32 @@ class DialectSpec extends SparkFunSuite {
     assert(spark.table("qual_ins_t").count() == 2)
     spark.sql("DROP TABLE qual_ins_t")
   }
+
+  test("LIMIT BY sorts on a column the select list leaves out") {
+    Tables.register(spark, sf)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the naive form; o_orderkey breaks o_totalprice ties so both forms
+    // pick the same rows
+    def naive(rnPred: String) = pairs(spark.sql(s"""
+      SELECT o_custkey, o_orderkey FROM (SELECT o_custkey, o_orderkey,
+        row_number() OVER (PARTITION BY o_custkey
+          ORDER BY o_totalprice DESC, o_orderkey) AS rn
+        FROM orders WHERE o_custkey < 40) WHERE $rnPred"""))
+    // o_totalprice is not selected
+    val got = pairs(ClickHouseSql.sql(spark, """
+      SELECT o_custkey, o_orderkey FROM orders WHERE o_custkey < 40
+      ORDER BY o_custkey, o_totalprice DESC, o_orderkey LIMIT 2 BY o_custkey"""))
+    val top2 = naive("rn <= 2")
+    assert(top2.nonEmpty && got.sorted == top2.sorted)
+    // rows come out in ORDER BY order: by key, then by the hidden sort
+    assert(got.map(_._1) == got.map(_._1).sorted)
+    // an aliased key beside the hidden column, with a per-key offset; the
+    // hidden columns do not leak into the output
+    val off = ClickHouseSql.sql(spark, """
+      SELECT o_custkey AS c, o_orderkey FROM orders WHERE o_custkey < 40
+      ORDER BY c, o_totalprice DESC, o_orderkey LIMIT 1 OFFSET 1 BY c""")
+    assert(off.columns.toSeq == Seq("c", "o_orderkey"))
+    assert(pairs(off).sorted == naive("rn = 2").sorted)
+  }
 }

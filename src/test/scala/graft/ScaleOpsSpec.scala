@@ -152,4 +152,43 @@ class ScaleOpsSpec extends SparkFunSuite {
     assert(spark.read.parquet(dst).select("id").as[Long].collect().toSet ==
       Set(7L))
   }
+
+  test("fanOutIfTiny is the identity on the sf0.001 corpus") {
+    Tables.names.foreach { n =>
+      val df = Tables.load(spark, sf, n)
+      assert(ScaleOps.fanOutIfTiny(df) eq df, n)
+    }
+    val li = Tables.load(spark, sf, "lineitem")
+    assert(ScaleOps.fanOutIfTiny(li, col("l_orderkey")) eq li)
+  }
+
+  test("fanOutIfTiny repartitions to Spark's split count; both lanes agree") {
+    val li = Tables.load(spark, sf, "lineitem")
+    val bytes = java.nio.file.Files.size(java.nio.file.Paths.get(s"$sf/lineitem.parquet"))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val plain = sorted(li)
+    val key = "spark.sql.files.openCostInBytes"
+    val prev = spark.conf.getOption(key)
+    try {
+      val open = 8192L
+      spark.conf.set(key, open.toString)
+      // FilePartition.maxSplitBytes over one file, written out
+      val cores = spark.sparkContext.defaultParallelism
+      val maxBytes = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes"))
+      val maxSplit = math.min(maxBytes, math.max(open, (bytes + open) / cores))
+      val expected = ((bytes + maxSplit - 1) / maxSplit).toInt
+      assert(expected > 1)
+      val keyed = ScaleOps.fanOutIfTiny(li, col("l_orderkey"))
+      val roundRobin = ScaleOps.fanOutIfTiny(li)
+      assert(keyed.rdd.getNumPartitions == expected)
+      assert(roundRobin.rdd.getNumPartitions == expected)
+      assert(sorted(keyed) == plain)
+      assert(sorted(roundRobin) == plain)
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

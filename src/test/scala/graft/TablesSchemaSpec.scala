@@ -47,4 +47,69 @@ class TablesSchemaSpec extends SparkFunSuite {
     Tables.register(spark, sf)
     assert(spark.table("nation").count() > 0)
   }
+
+  /** Jobs launched by `body` on this thread: the job group tags them, and a
+    * sentinel job run last proves the listener has seen every earlier one. */
+  private def jobsDuring(session: org.apache.spark.sql.SparkSession)(
+      body: => Unit): Int = {
+    import org.apache.spark.scheduler._
+    val sc = session.sparkContext
+    val group = s"tables-spec-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
+          if (p.getProperty("spark.job.description") == "sentinel") done.countDown()
+          else jobs.incrementAndGet()
+        }
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "tables spec")
+      body
+      sc.setJobDescription("sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a warm load in the same session launches no job") {
+    Tables.load(spark, sf, "lineitem")
+    var df: org.apache.spark.sql.DataFrame = null
+    assert(jobsDuring(spark) { df = Tables.load(spark, sf, "lineitem") } == 0)
+    assert(df.schema == spark.read.parquet(s"$sf/lineitem.parquet").schema)
+    assert(df.count() == spark.read.parquet(s"$sf/lineitem.parquet").count())
+  }
+
+  test("an overwritten table file is resolved again") {
+    val dir = Files.createTempDirectory("graft_rewrite").toString
+    val path = s"$dir/region.parquet"
+    spark.sql("SELECT 1L AS r_regionkey").coalesce(1)
+      .write.mode("overwrite").parquet(path)
+    assert(Tables.load(spark, dir, "region").collect().map(_.getLong(0)).toSeq == Seq(1L))
+    assert(Tables.load(spark, dir, "region").columns.toSeq == Seq("r_regionkey"))
+    spark.sql("SELECT 2L AS r_regionkey, 'x' AS r_name").coalesce(1)
+      .write.mode("overwrite").parquet(path)
+    val again = Tables.load(spark, dir, "region")
+    assert(again.columns.toSeq == Seq("r_regionkey", "r_name"))
+    assert(again.collect().map(r => (r.getLong(0), r.getString(1))).toSeq ==
+      Seq((2L, "x")))
+  }
+
+  test("a second session resolves its own relation") {
+    Tables.load(spark, sf, "supplier")
+    val other = spark.newSession()
+    assert(jobsDuring(other) { Tables.load(other, sf, "supplier") } > 0)
+    assert(jobsDuring(other) { Tables.load(other, sf, "supplier") } == 0)
+    assert(Tables.load(other, sf, "supplier").count() ==
+      Tables.load(spark, sf, "supplier").count())
+  }
 }
