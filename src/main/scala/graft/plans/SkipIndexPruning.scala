@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Contains, EndsWith, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, Lower, StartsWith}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{CatalogFileIndex, FileIndex, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.types.StructType
 
 /** TRANSPARENT skip-index pruning — the way the reference actually applies
   * its skip indexes: the user writes a plain SELECT and
@@ -31,11 +32,15 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
   * Mechanics (same extension point as [[AggProjections]] /
   * [[NormalProjections]]): an extraOptimizations rule matches
   * Filter-over-LogicalRelation plans whose relation roots at a registered
-  * data dir, turns supported conjuncts into per-index file sets
-  * (driver-resident index reads, |files| rows each), intersects them, and
-  * swaps the relation's location for an [[InMemoryFileIndex]] over the
-  * surviving files. After the swap the root paths no longer match the
-  * registry, so the rule cannot re-fire on its own output.
+  * data dir, probes each supported conjunct against each index's
+  * driver-resident per-file summaries (no job), and swaps the relation's
+  * location for an [[InMemoryFileIndex]] over the live files no probe
+  * rules out. Only a file the index covers — same path, length and
+  * modification time — can be ruled out: a live file the index does not
+  * cover is always read, and a summary whose file is gone is ignored, so
+  * a stale index can cost I/O but never rows. After the swap the root
+  * paths no longer match the registry, so the rule cannot re-fire on its
+  * own output.
   * Hive-partitioned relations keep their partition values: the swap
   * carries the original location's partition spec, so partition pruning
   * and skip-index file pruning COMPOSE (round 8; the reference layers
@@ -43,8 +48,14 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFil
   */
 object SkipIndexPruning {
 
-  final case class Idx(dataPath: String, kind: String, indexDir: String,
-      columns: Set[String])
+  /** One index over a data dir, with its per-file summaries held on the
+    * driver. `id` tells indexes over the same dir apart (the explicit
+    * API's index dir, the dialect's table.index name). */
+  final case class Idx(dataPath: String, spec: SkipIndex.Spec, id: String,
+      files: SkipIndex.Files) {
+    def kind: String = spec.kind
+    def columns: Set[String] = spec.columns.toSet
+  }
 
   /** canon(dataPath) → registered indexes over that dir (a dir can carry
     * several, like a reference table with several INDEX clauses). */
@@ -53,25 +64,52 @@ object SkipIndexPruning {
   private def canon(p: String): String =
     new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  /** Register an index built with the matching [[SkipIndex]] builder for
-    * transparent use and install the rule. `kind` ∈ bloom_filter | minmax
-    * | set | ngrambf_v1. */
-  def register(spark: SparkSession, dataDir: String, indexDir: String,
-      columns: Seq[String], kind: String = "bloom_filter"): Unit = {
-    val key = canon(dataDir)
-    val idx = Idx(key, kind, indexDir, columns.toSet)
-    registry.merge(key, List(idx),
-      (old, _) => idx :: old.filterNot(_.indexDir == idx.indexDir))
+  private def put(spark: SparkSession, idx: Idx): Unit = {
+    registry.merge(idx.dataPath, List(idx),
+      (old, _) => idx :: old.filterNot(_.id == idx.id))
     install(spark)
+  }
+
+  /** Register an index the explicit [[SkipIndex]] API wrote to `indexDir`
+    * for transparent use (its rows are read onto the driver once) and
+    * install the rule. `kind` ∈ bloom_filter | minmax | set | ngrambf_v1. */
+  def register(spark: SparkSession, dataDir: String, indexDir: String,
+      columns: Seq[String], kind: String = "bloom_filter"): Unit =
+    put(spark, Idx(canon(dataDir), SkipIndex.Spec(kind, columns), indexDir,
+      SkipIndex.load(spark, indexDir, kind)))
+
+  /** Bring index `id` over `dataDir` up to date with the dir's live files
+    * and register it: summaries of files that are gone are dropped, and
+    * the kind's aggregate runs over only the files no summary covers yet —
+    * after an INSERT, the inserted file, not the table. `schema` is the
+    * data's read schema (partition columns included). */
+  def refresh(spark: SparkSession, dataDir: String, id: String,
+      spec: SkipIndex.Spec, schema: StructType): Unit = {
+    val key = canon(dataDir)
+    val prior = Option(registry.get(key)).toSeq.flatten
+      .find(i => i.id == id && i.spec == spec).map(_.files).getOrElse(Map.empty)
+    val live = liveFiles(spark, dataDir)
+    val kept = prior.filter { case (st, _) => live.contains(st) }
+    val fresh = SkipIndex.build(spark, dataDir,
+      live.filterNot(kept.contains).map(_.path).toSeq.sorted, schema, spec)
+    put(spark, Idx(key, spec, id, kept ++ fresh))
+  }
+
+  /** The parquet files Spark would read under `dir`, listed on the driver. */
+  private def liveFiles(spark: SparkSession, dir: String): Set[SkipIndex.Stamp] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (!path.getFileSystem(spark.sessionState.newHadoopConf()).exists(path)) Set.empty
+    else new InMemoryFileIndex(spark, Seq(path), Map.empty, None)
+      .allFiles().map(SkipIndex.stampOf).toSet
   }
 
   /** Unregister every index over the data dir. */
   def drop(dataDir: String): Unit = registry.remove(canon(dataDir))
 
-  /** Unregister one index (by its index dir) over the data dir. */
-  def dropIndex(dataDir: String, indexDir: String): Unit =
+  /** Unregister one index (by its id) over the data dir. */
+  def dropIndex(dataDir: String, id: String): Unit =
     registry.computeIfPresent(canon(dataDir),
-      (_, old) => old.filterNot(_.indexDir == indexDir) match {
+      (_, old) => old.filterNot(_.id == id) match {
         case Nil => null
         case rest => rest
       })
@@ -130,28 +168,22 @@ object SkipIndexPruning {
     private def scalaValue(l: Literal): Any =
       CatalystTypeConverters.convertToScala(l.value, l.dataType)
 
-    /** The file set one conjunct admits under one index, or None when the
-      * conjunct doesn't probe this index. */
-    private def fileSet(idx: Idx, c: Expression): Option[Set[String]] = {
-      def bloomEq(a: AttributeReference, hashes: Seq[Long]) =
-        if (idx.kind == "bloom_filter" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesByHash(spark, idx.indexDir, a.name,
-            hashes).toSet)
+    /** The column one conjunct probes under one index and the kind's
+      * probe, or None when the conjunct doesn't probe this index. */
+    private def probe(idx: Idx, c: Expression)
+        : Option[(String, SkipIndex.Summary => Boolean)] = {
+      def on(kind: String, a: AttributeReference)(
+          admits: => SkipIndex.Summary => Boolean) =
+        if (idx.kind == kind && idx.columns.contains(a.name)) Some(a.name -> admits)
         else None
-      def setEq(a: AttributeReference, vals: Seq[Any]) =
-        if (idx.kind == "set" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesSet(spark, idx.indexDir, a.name,
-            vals).toSet)
-        else None
+      def bloomEq(a: AttributeReference, hashes: => Seq[Long]) =
+        on("bloom_filter", a)(SkipIndex.admitsHashes(hashes))
+      def setEq(a: AttributeReference, vals: => Seq[Any]) =
+        on("set", a)(SkipIndex.admitsValues(vals))
       def mmBound(a: AttributeReference, lo: Option[Any], hi: Option[Any]) =
-        if (idx.kind == "minmax" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesBound(spark, idx.indexDir, a.name,
-            lo, hi).toSet)
-        else None
+        on("minmax", a)(SkipIndex.admitsBound(lo, hi))
       def ngram(a: AttributeReference, needle: String) =
-        if (idx.kind == "ngrambf_v1" && idx.columns.contains(a.name))
-          Some(SkipIndex.matchingFilesLike(spark, idx.indexDir, needle).toSet)
-        else None
+        on("ngrambf_v1", a)(SkipIndex.admitsNeedle(needle))
       /** Smallest string ≥ every string carrying `pre` as a prefix, in
         * UTF-8 binary order (the order Spark compares strings in): strip
         * trailing max-lane chars, increment the last remaining one.
@@ -180,7 +212,7 @@ object SkipIndexPruning {
             .orElse(setEq(a, Seq(scalaValue(l))))
             .orElse(mmBound(a, Some(scalaValue(l)), Some(scalaValue(l))))
         case EqualTo(l: Literal, a: AttributeReference) if l.value != null =>
-          fileSet(idx, EqualTo(a, l))
+          probe(idx, EqualTo(a, l))
         case In(a: AttributeReference, vs)
             if vs.forall(v => v.isInstanceOf[Literal] &&
               v.asInstanceOf[Literal].value != null) =>
@@ -253,14 +285,15 @@ object SkipIndexPruning {
       * relation keeps both its partition values (columns read from dir
       * names) and Catalyst's partition pruning — exactly the reference's
       * layering, where partition pruning and skip-index granule pruning
-      * compose (MergeTreeDataSelectExecutor). A partitioned location
-      * that doesn't expose its spec (non-PartitioningAware) still bails. */
-    private def swappedLocation(fs: HadoopFsRelation,
-        files: Seq[String]): Option[org.apache.spark.sql.execution.datasources.FileIndex] = {
+      * compose (MergeTreeDataSelectExecutor). A catalog-partitioned
+      * table's spec comes from its listed partitions; any other location
+      * that doesn't expose its spec still bails. */
+    private def swappedLocation(fs: HadoopFsRelation, location: FileIndex,
+        files: Seq[String]): Option[FileIndex] = {
       val paths = files.map(new org.apache.hadoop.fs.Path(_))
       if (fs.partitionSchema.isEmpty)
         Some(new InMemoryFileIndex(spark, paths, Map.empty, Some(fs.dataSchema)))
-      else fs.location match {
+      else location match {
         case pa: org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex =>
           Some(new InMemoryFileIndex(spark, paths, Map.empty,
             Some(org.apache.spark.sql.types.StructType(
@@ -280,27 +313,35 @@ object SkipIndexPruning {
           case fs: HadoopFsRelation =>
             val roots = fs.location.rootPaths.map(p => canon(p.toString))
             val idxs = roots.flatMap(r => Option(registry.get(r)).toSeq.flatten)
-            if (idxs.isEmpty) None
+            val probes = for {
+              c <- conjuncts(cond)
+              idx <- idxs
+              (column, admits) <- probe(idx, c)
+            } yield (idx, column, admits)
+            if (probes.isEmpty) None
             else {
-              val sets = for {
-                c <- conjuncts(cond)
-                idx <- idxs
-                s <- fileSet(idx, c)
-              } yield (idx, s)
-              if (sets.isEmpty) None
-              else {
-                val files = sets.map(_._2).reduce(_ intersect _).toSeq.sorted
-                val total = fs.location.inputFiles.length
-                sets.groupBy(_._1).foreach { case (idx, ss) =>
-                  logDecision(Decision(idx.dataPath, idx.kind, idx.columns,
-                    ss.map(_._2).reduce(_ intersect _).size, total))
-                }
-                if (files.size >= total) None
-                else swappedLocation(fs, files).map { newLocation =>
-                  val newFs = fs.copy(location = newLocation)(spark)
-                  lr.copy(relation = newFs)
-                }
+              // a catalog-partitioned table lists through its partitions,
+              // as Spark's own PruneFileSourcePartitions resolves it
+              val location = fs.location match {
+                case c: CatalogFileIndex => c.filterPartitions(Nil)
+                case l => l
               }
+              val live = location.listFiles(Nil, Nil)
+                .flatMap(_.files.map(f => SkipIndex.stampOf(f.fileStatus)))
+              val liveSet = live.toSet
+              val ruledOut = probes.map { case (idx, column, admits) =>
+                idx -> SkipIndex.excluded(idx.files, column, liveSet)(admits)
+              }
+              ruledOut.groupBy { case (idx, _) => (idx.dataPath, idx.id) }
+                .valuesIterator.foreach { outs =>
+                  val idx = outs.head._1
+                  logDecision(Decision(idx.dataPath, idx.kind, idx.columns,
+                    live.size - outs.map(_._2).reduce(_ union _).size, live.size))
+                }
+              val out = ruledOut.map(_._2).reduce(_ union _)
+              if (out.isEmpty) None
+              else swappedLocation(fs, location, live.filterNot(out).map(_.path))
+                .map(loc => lr.copy(relation = fs.copy(location = loc)(spark)))
             }
           case _ => None
         }

@@ -181,7 +181,7 @@ object DialectQueries extends QueryPack {
       FROM documents ORDER BY doc_id"""),
 
     // ORDER BY ... WITH FILL in SQL form (ASTSelectQuery.h:38 fill
-    // clause): dense month axis with gaps as NULL.
+    // clause): dense month axis, gaps filled with the type default (0).
     ch("q_ch_with_fill", """
       SELECT m, n FROM (
         SELECT toMonth(o_orderdate) AS m, count() AS n
@@ -190,7 +190,7 @@ object DialectQueries extends QueryPack {
         GROUP BY toMonth(o_orderdate))
       ORDER BY m WITH FILL FROM 1 TO 13""",
       """
-      SELECT m, n
+      SELECT m, COALESCE(n, 0) AS n
       FROM (SELECT UNNEST(GENERATE_SERIES(1, 12)) AS m) a
       LEFT JOIN (SELECT CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS m, COUNT(*) AS n
                  FROM orders
@@ -222,7 +222,8 @@ object DialectQueries extends QueryPack {
     // WITH FILL ... STALENESS (FillingTransform.h:87): filling stops once
     // the generated value drifts `n` or more past the previous ORIGINAL
     // row. Real rows at m = 0,4,8,12,16 (5 nations per region), staleness
-    // 2 → only each real row's immediate successor survives the fill.
+    // 2 → only each real row's immediate successor survives the fill,
+    // with the type default (0) for n.
     ch("q_with_fill_staleness", """
       SELECT m, n FROM (
         SELECT n_regionkey * 4 AS m, count() AS n
@@ -230,8 +231,8 @@ object DialectQueries extends QueryPack {
       ORDER BY m WITH FILL FROM 0 TO 20 STALENESS 2""",
       """
       SELECT CAST(m AS INT) AS m, CAST(n AS BIGINT) AS n FROM (VALUES
-        (0, 5), (1, NULL), (4, 5), (5, NULL), (8, 5), (9, NULL),
-        (12, 5), (13, NULL), (16, 5), (17, NULL)) t(m, n) ORDER BY m"""),
+        (0, 5), (1, 0), (4, 5), (5, 0), (8, 5), (9, 0),
+        (12, 5), (13, 0), (16, 5), (17, 0)) t(m, n) ORDER BY m"""),
 
     // GROUP BY ALL / ORDER BY ALL (the reference's enable_order_by_all /
     // GROUP BY ALL sugar, src/Parsers/ParserSelectQuery.cpp): every
@@ -249,8 +250,8 @@ object DialectQueries extends QueryPack {
 
     // WITH FILL over a DATE axis (round 8 — the FillingTransform date
     // grid): per-day event counts densified over [Jan 1, Jan 15) with an
-    // INTERVAL 1 DAY step; days before the data stay NULL-filled, the
-    // source rows join back exactly.
+    // INTERVAL 1 DAY step; days without data get n = 0 (the type
+    // default), the source rows join back exactly.
     ch("q_ch_with_fill_date", """
       SELECT d, n FROM (
         SELECT toDate(ts) AS d, count() AS n FROM events
@@ -260,7 +261,7 @@ object DialectQueries extends QueryPack {
       ORDER BY d WITH FILL FROM toDate('2024-01-01') TO toDate('2024-01-15')
         STEP INTERVAL 1 DAY""",
       """
-      SELECT d, n FROM
+      SELECT d, COALESCE(n, 0) AS n FROM
         (SELECT CAST(UNNEST(GENERATE_SERIES(DATE '2024-01-01',
            DATE '2024-01-14', INTERVAL 1 DAY)) AS DATE) AS d) a
       LEFT JOIN (SELECT CAST(ts AS DATE) AS d, COUNT(*) AS n FROM events

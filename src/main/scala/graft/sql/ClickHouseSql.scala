@@ -245,8 +245,11 @@ object ClickHouseSql {
     * src/Parsers/ASTSelectQuery.h:38): densify the integer axis with a
     * sequence + LEFT JOIN; INTERPOLATE (col) carries col forward over the
     * filled rows (last non-null). The fill window runs over the DENSE AXIS
-    * rows only — bounded by (b-a)/s, not by input size. Supported form:
-    * clause terminates the query; integer axis. */
+    * rows only — bounded by (b-a)/s, not by input size. Without
+    * INTERPOLATE, a generated row takes each other column's type default
+    * (0, ''), as FillingTransform does, and a source row keeps its own
+    * values, NULLs included ([[fillSource]] / [[fillDefaults]]). Supported
+    * form: clause terminates the query; integer or date axis. */
   private def rewriteWithFill(s: String): String = {
     // DATE/DATETIME axis form (round 8): FROM toDate('…') TO toDate('…')
     // STEP INTERVAL n unit — the grid is a date/timestamp sequence,
@@ -269,13 +272,13 @@ object ClickHouseSql {
         val joined =
           s"(SELECT $axis FROM (SELECT explode(sequence($lit '$from', $lit '$to', " +
             s"INTERVAL $n $unit)) AS $axis) WHERE $axis < $lit '$to') __fill_axis " +
-            s"FULL OUTER JOIN ($core) __fill_src USING ($axis)"
+            s"FULL OUTER JOIN ${fillSource(axis, core, interp)} USING ($axis)"
         return (interp match {
           case Some(c) =>
             s"SELECT $axis, last($c, true) OVER (ORDER BY $axis " +
               s"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS $c " +
               s"FROM $joined ORDER BY $axis"
-          case None => s"SELECT * FROM $joined ORDER BY $axis"
+          case None => fillDefaults(axis, joined)
         })
       case None =>
     }
@@ -304,14 +307,13 @@ object ClickHouseSql {
             // generated, never used to filter (round-2 advice; LEFT JOIN
             // from the axis dropped them).
             val joined = s"(SELECT explode(sequence($from, ${to - 1}, $step)) AS $axis) __fill_axis " +
-              s"FULL OUTER JOIN ($core) __fill_src USING ($axis)"
+              s"FULL OUTER JOIN ${fillSource(axis, core, interp)} USING ($axis)"
             interp match {
               case Some(c) =>
                 s"SELECT $axis, last($c, true) OVER (ORDER BY $axis " +
                   s"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS $c " +
                   s"FROM $joined ORDER BY $axis"
-              case None =>
-                s"SELECT * FROM $joined ORDER BY $axis"
+              case None => fillDefaults(axis, joined)
             }
           case Some(st) =>
             // WITH FILL … STALENESS n (FillingTransform.h:87,
@@ -323,7 +325,7 @@ object ClickHouseSql {
             // always survive. The window runs over the dense axis only —
             // bounded by (TO-FROM)/STEP rows.
             val joined = s"(SELECT explode(sequence($from, ${to - 1}, $step)) AS $axis) __fill_axis " +
-              s"FULL OUTER JOIN (SELECT *, 1 AS __src FROM ($core)) __fill_src USING ($axis)"
+              s"FULL OUTER JOIN ${fillSource(axis, core, interp, ", 1 AS __src")} USING ($axis)"
             val marked = s"SELECT *, last(CASE WHEN __src = 1 THEN $axis END, true) " +
               s"OVER (ORDER BY $axis ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) " +
               s"AS __prev FROM $joined"
@@ -334,12 +336,27 @@ object ClickHouseSql {
                 s"SELECT $axis, last($c, true) OVER (ORDER BY $axis " +
                   s"ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS $c " +
                   s"FROM ($kept) ORDER BY $axis"
-              case None =>
-                s"SELECT * FROM ($kept) ORDER BY $axis"
+              case None => fillDefaults(axis, s"($kept)")
             }
         }
     }
   }
+
+  /** The WITH FILL source side. Without INTERPOLATE the core's non-axis
+    * columns ride packed in one struct, `__fill_row`, which the FULL OUTER
+    * join leaves NULL on exactly the generated rows. */
+  private def fillSource(axis: String, core: String, interp: Option[String],
+      extra: String = ""): String =
+    if (interp.isDefined) s"(SELECT *$extra FROM ($core)) __fill_src"
+    else s"(SELECT $axis, struct(* EXCEPT ($axis)) AS __fill_row$extra " +
+      s"FROM ($core)) __fill_src"
+
+  /** Unpack `__fill_row`, a NULL row (a generated one) as its type's
+    * default: every column 0, '' and so on, in one expression. */
+  private def fillDefaults(axis: String, from: String): String =
+    s"SELECT $axis, __fill_r.* FROM (SELECT $axis, coalesce(__fill_row, " +
+      s"defaultValueOfArgumentType(__fill_row)) AS __fill_r FROM $from) " +
+      s"ORDER BY $axis"
 
   /** CH zero-arg `count()` → `count(*)` (the registry deliberately does
     * not shadow Spark's `count`). */
@@ -2753,21 +2770,24 @@ object ClickHouseSql {
     *     TYPE bloom_filter | minmax | ngrambf_v1(n[, …]) [GRANULARITY g]
     *   ALTER TABLE t DROP INDEX [IF EXISTS] name
     *   ALTER TABLE t MATERIALIZE/CLEAR INDEX name
-    * bloom_filter additionally registers for TRANSPARENT pruning
-    * (SkipIndexPruning); GRANULARITY is accepted and ignored — pruning is
-    * file-granular here (the analog of the reference's granule). ADD
-    * builds eagerly; MATERIALIZE rebuilds from the table's CURRENT data;
-    * CLEAR deletes the built structure and disables pruning while keeping
-    * the metadata entry visible (reference semantics: CLEAR drops built
+    * GRANULARITY is accepted and ignored — pruning is file-granular here
+    * (the analog of the reference's granule). An index is per-file
+    * summaries held on the driver (SkipIndexPruning.Idx). ADD builds them
+    * eagerly; MATERIALIZE catches up with the table's CURRENT files;
+    * CLEAR drops the summaries and disables pruning while keeping the
+    * metadata entry visible (reference semantics: CLEAR drops built
     * files, keeps the index declared; MATERIALIZE re-builds it). Every
     * kind registers for TRANSPARENT pruning (SkipIndexPruning serves
     * equality via bloom/set, ranges via minmax, LIKE/contains via
-    * ngrambf). Mutations that rewrite the table's files (DELETE,
-    * TRUNCATE, OPTIMIZE ... DEDUPLICATE) call [[refreshSkipIndexes]] so a
-    * registered index never prunes against stale file names. */
+    * ngrambf). Every write (INSERT, DELETE, TRUNCATE, OPTIMIZE ...
+    * DEDUPLICATE, partition verbs) calls [[refreshSkipIndexes]], which
+    * aggregates only the files the write added. */
   private final case class SkipIdx(table: String, name: String,
-      basePath: String, kind: String, idxDir: String, columns: Seq[String],
-      param: Option[Int], cleared: Boolean)
+      basePath: String, kind: String, columns: Seq[String],
+      param: Option[Int], cleared: Boolean) {
+    /** The index's id among the indexes over `basePath`. */
+    def id: String = s"$table.$name"
+  }
 
   /** name → (schema DDL, data location) for DETACH/ATTACH TABLE. */
   private val detachedTables =
@@ -2935,30 +2955,15 @@ object ClickHouseSql {
     }.sortBy(x => (x._1, x._2))
   }
 
-  /** Build (or re-build) one index's on-disk structure from the table's
-    * current files and (re-)register transparent pruning. */
-  private def buildSkipIndex(spark: SparkSession, m: SkipIdx): Unit = {
-    m.kind match {
-      case "bloom_filter" =>
-        graft.operators.SkipIndex.create(spark, m.basePath, m.idxDir, m.columns)
-      case "minmax" =>
-        graft.operators.SkipIndex.createMinMax(spark, m.basePath, m.idxDir, m.columns)
-      case "ngrambf_v1" =>
-        graft.operators.SkipIndex.createNgram(spark, m.basePath, m.idxDir,
-          m.columns.head, n = m.param.getOrElse(3))
-      case "set" =>
-        graft.operators.SkipIndex.createSet(spark, m.basePath, m.idxDir,
-          m.columns, maxValues = m.param.getOrElse(100))
-    }
-    graft.plans.SkipIndexPruning.register(spark, m.basePath, m.idxDir,
-      m.columns, m.kind)
-  }
+  /** Bring one index's driver-resident per-file summaries up to date with
+    * the table's current files (only files it does not cover yet are
+    * aggregated) and (re-)register transparent pruning. */
+  private def buildSkipIndex(spark: SparkSession, m: SkipIdx): Unit =
+    graft.plans.SkipIndexPruning.refresh(spark, m.basePath, m.id,
+      graft.operators.SkipIndex.Spec.ddl(m.kind, m.columns, m.param),
+      spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(m.table)).schema)
 
-  /** Invalidate-by-rebuild after a mutation rewrote `table`'s files with
-    * new names (the ADVICE r6 staleness hazard: a registered index over
-    * deleted paths silently empties results). Cleared indexes stay
-    * cleared; a rebuild that fails (e.g. the table is now empty) degrades
-    * to no-pruning, never to wrong answers. */
   // ---- file() table function (TableFunctionFile.cpp) ------------------
 
   private val fileFnRe =
@@ -3890,14 +3895,18 @@ object ClickHouseSql {
     }
   }
 
+  /** Catch `table`'s indexes up after a write (INSERT, mutation, OPTIMIZE,
+    * partition verb): summaries of files the write removed are dropped and
+    * only the files it added are aggregated. Cleared indexes stay cleared;
+    * a refresh that fails degrades to no pruning, never to wrong answers
+    * (the pruning rule also never rules out a file no summary covers). */
   private def refreshSkipIndexes(spark: SparkSession, table: String): Unit = {
     import scala.jdk.CollectionConverters._
     skipIndexes.asScala.values.filter(m => m.table == table && !m.cleared)
       .foreach { m =>
         try buildSkipIndex(spark, m)
         catch { case _: Exception =>
-          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-          graft.operators.SkipIndex.drop(spark, m.idxDir)
+          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.id)
         }
       }
     refreshProjections(spark, table)
@@ -3937,22 +3946,18 @@ object ClickHouseSql {
       case add(table, name, colSpec, kind0, param) =>
         val basePath = tableLocation(spark, table)
         val cols = colSpec.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-        val idxDir = new org.apache.hadoop.fs.Path(
-          spark.conf.get("spark.sql.warehouse.dir"),
-          s"graft_skip_indexes/${table}_$name").toString
         val kind = kind0.toLowerCase
         if (!Set("bloom_filter", "minmax", "ngrambf_v1", "set").contains(kind))
           throw new IllegalArgumentException(
             s"unsupported skip-index type $kind (bloom_filter|minmax|ngrambf_v1|set)")
-        val m = SkipIdx(table, name, basePath, kind, idxDir, cols,
+        val m = SkipIdx(table, name, basePath, kind, cols,
           Option(param).map(_.toInt), cleared = false)
         buildSkipIndex(spark, m)
         skipIndexes.put((table, name), m)
         Seq("OK").toDF("status")
       case drop(table, name) =>
         Option(skipIndexes.remove((table, name))).foreach { m =>
-          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-          graft.operators.SkipIndex.drop(spark, m.idxDir)
+          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.id)
         }
         Seq("OK").toDF("status")
       case clear(table, name) =>
@@ -3960,8 +3965,7 @@ object ClickHouseSql {
         // the index declared (system.data_skipping_indices still lists it)
         // so MATERIALIZE INDEX can rebuild it.
         skipIndexes.computeIfPresent((table, name), (_, m) => {
-          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.idxDir)
-          graft.operators.SkipIndex.drop(spark, m.idxDir)
+          graft.plans.SkipIndexPruning.dropIndex(m.basePath, m.id)
           m.copy(cleared = true)
         })
         Seq("OK").toDF("status")

@@ -51,7 +51,7 @@ class DialectSpec extends SparkFunSuite {
     val rows = ClickHouseSql.sql(spark,
       "SELECT k, v FROM fill_src ORDER BY k WITH FILL FROM 1 TO 4")
       .collect().map(r => (r.getInt(0), if (r.isNullAt(1)) null else r.getString(1)))
-    assert(rows.toSeq == Seq((1, "a"), (2, null), (3, null), (9, "z")))
+    assert(rows.toSeq == Seq((1, "a"), (2, ""), (3, ""), (9, "z")))
     intercept[IllegalArgumentException] {
       ClickHouseSql.rewrite("SELECT k FROM fill_src ORDER BY k WITH FILL FROM 1 TO 4 STEP -1")
     }
@@ -261,5 +261,48 @@ class DialectSpec extends SparkFunSuite {
       ORDER BY c, o_totalprice DESC, o_orderkey LIMIT 1 OFFSET 1 BY c""")
     assert(off.columns.toSeq == Seq("c", "o_orderkey"))
     assert(pairs(off).sorted == naive("rn = 2").sorted)
+  }
+
+  test("WITH FILL gives generated rows type defaults; source NULLs stay") {
+    ChFunctionRegistry.install(spark)
+    spark.sql("""SELECT * FROM VALUES
+        (1, 'a', 2.5D, CAST(NULL AS INT), DATE '2024-01-02'),
+        (4, CAST(NULL AS STRING), CAST(NULL AS DOUBLE), 7, CAST(NULL AS DATE))
+        t(k, v, d, i, dt)""")
+      .createOrReplaceTempView("fill_defaults_src")
+    def cells(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map(x => if (x == null) null else x.toString)).toSeq
+    val q = "SELECT k, v, d, i, dt FROM fill_defaults_src ORDER BY k WITH FILL FROM 0 TO 6"
+    val filled = ClickHouseSql.sql(spark, q)
+    assert(filled.columns.toSeq == Seq("k", "v", "d", "i", "dt"))
+    val gen = Seq("", "0.0", "0", "1970-01-01")
+    assert(cells(filled) == Seq(
+      "0" +: gen,
+      Seq("1", "a", "2.5", null, "2024-01-02"),
+      "2" +: gen, "3" +: gen,
+      Seq("4", null, null, "7", null),
+      "5" +: gen))
+    // the NULL-filling join it replaces runs the same jobs: the defaults
+    // cost no Spark job
+    val nullFilled = spark.sql("""
+      SELECT * FROM (SELECT explode(sequence(0, 5)) AS k) __fill_axis
+      FULL OUTER JOIN (SELECT k, v, d, i, dt FROM fill_defaults_src) __fill_src
+      USING (k) ORDER BY k""")
+    assert(jobsDuring(spark)(ClickHouseSql.sql(spark, q).collect()) ==
+      jobsDuring(spark)(nullFilled.collect()))
+    // STALENESS and the date axis fill defaults the same way
+    val stale = ClickHouseSql.sql(spark,
+      "SELECT k, v FROM fill_defaults_src ORDER BY k WITH FILL FROM 0 TO 6 STALENESS 2")
+    assert(cells(stale) == Seq(Seq("1", "a"), Seq("2", ""), Seq("4", null), Seq("5", "")))
+    val byDay = ClickHouseSql.sql(spark, """
+      SELECT dt, k FROM fill_defaults_src WHERE dt IS NOT NULL
+      ORDER BY dt WITH FILL FROM toDate('2024-01-01') TO toDate('2024-01-04')
+        STEP INTERVAL 1 DAY""")
+    assert(cells(byDay) == Seq(Seq("2024-01-01", "0"), Seq("2024-01-02", "1"),
+      Seq("2024-01-03", "0")))
+    // an axis-only select list still fills
+    assert(cells(ClickHouseSql.sql(spark,
+      "SELECT k FROM fill_defaults_src ORDER BY k WITH FILL FROM 0 TO 3")) ==
+      Seq(Seq("0"), Seq("1"), Seq("2"), Seq("4")))
   }
 }

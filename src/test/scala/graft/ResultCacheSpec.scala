@@ -1,25 +1,28 @@
 package graft
 
 import graft.operators.ResultCache
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** Pins the query-result-cache reuse semantics
   * (ref src/Interpreters/Cache/QueryResultCache.cpp): canonical-plan
-  * keying, hit/miss accounting, InMemoryRelation reuse, LRU eviction
-  * with eager unpersist. */
+  * keying, hit/miss accounting, hits served from driver-resident rows
+  * with no job, the entry-size cap, LRU eviction. */
 class ResultCacheSpec extends SparkFunSuite {
 
   private def lineitem = Tables.load(spark, sf, "lineitem")
 
   test("identical queries share one entry; Catalyst-equivalent plans hit") {
     val cache = new ResultCache(maxEntries = 8)
-    val q1 = cache.cached(lineitem.groupBy("l_returnflag").count())
-    assert(q1.count() > 0) // materialize
-    val q2 = cache.cached(lineitem.groupBy("l_returnflag").count())
+    val q = lineitem.groupBy("l_returnflag").count().orderBy("l_returnflag")
+    val first = cache.cached(q).collect()
+    assert(first.nonEmpty)
+    // a hit is answered from the stored rows: no job, same rows, same order
+    var second: Array[org.apache.spark.sql.Row] = null
+    assert(jobsDuring(spark) {
+      second = cache.cached(lineitem.groupBy("l_returnflag").count()
+        .orderBy("l_returnflag")).collect()
+    } == 0)
     assert(cache.hits == 1 && cache.misses == 1 && cache.size == 1)
-    // the reused frame reads from the persisted result blocks
-    assert(q2.queryExecution.optimizedPlan.exists(_.isInstanceOf[InMemoryRelation]))
-    assert(q1.collect().toSet == q2.collect().toSet)
+    assert(second.toSeq == first.toSeq)
   }
 
   test("different queries miss; results stay correct") {
@@ -42,6 +45,25 @@ class ResultCacheSpec extends SparkFunSuite {
     assert(cache.misses == 4 && cache.size == 2)
   }
 
+  test("a result over the entry cap comes back correct but is not stored") {
+    val cache = new ResultCache(maxEntries = 8)
+    // rows x schema.defaultSize must exceed the 1 MiB cap
+    val n = 50000L
+    val big = spark.range(0, n).selectExpr("id", "CAST(id * 7 AS STRING) AS s")
+    assert(n * big.schema.defaultSize > ResultCache.MaxEntryBytes,
+      s"fixture too small for the cap: $n rows x ${big.schema.defaultSize} bytes")
+    val got = cache.cached(big).collect()
+    assert(got.length == n)
+    assert(got.forall(r => r.getString(1) == (r.getLong(0) * 7).toString))
+    assert(got.map(_.getLong(0)).toSet == (0L until n).toSet)
+    assert(cache.size == 0 && cache.misses == 1)
+    cache.cached(big)
+    assert(cache.hits == 0 && cache.misses == 2, "an oversized result must not hit")
+    // a small result is stored under the same cache
+    cache.cached(lineitem.selectExpr("count(*) AS c"))
+    assert(cache.size == 1)
+  }
+
   test("clear drops all entries") {
     val cache = new ResultCache(maxEntries = 4)
     cache.cached(lineitem.selectExpr("count(*) AS c"))
@@ -57,13 +79,13 @@ class ResultCacheSpec extends SparkFunSuite {
     ClickHouseSql.sql(spark, "SET use_query_cache = 1")
     try {
       val q = "SELECT r_regionkey, count() AS n FROM region GROUP BY r_regionkey ORDER BY r_regionkey"
-      val a = ClickHouseSql.sql(spark, q); a.collect()
-      val b = ClickHouseSql.sql(spark, q)
+      val a = ClickHouseSql.sql(spark, q).collect()
+      var b: Array[org.apache.spark.sql.Row] = null
+      assert(jobsDuring(spark) { b = ClickHouseSql.sql(spark, q).collect() } == 0,
+        "a query-cache hit launched a job")
       assert(ClickHouseSql.queryCache.hits == h0 + 1,
         "second identical SELECT did not hit the query cache")
-      assert(b.queryExecution.optimizedPlan
-        .exists(_.isInstanceOf[InMemoryRelation]))
-      assert(a.collect().toSeq == b.collect().toSeq)
+      assert(a.toSeq == b.toSeq)
       // SYSTEM DROP QUERY CACHE empties it
       ClickHouseSql.sql(spark, "SYSTEM DROP QUERY CACHE")
       assert(ClickHouseSql.queryCache.size == 0)

@@ -399,4 +399,96 @@ class SkipIndexSpec extends SparkFunSuite {
       .filter(col("lang") === l).count()
     assert(viaIndex == full && full > 0)
   }
+
+  /** A fresh managed table name: catalog entry and warehouse dir gone. */
+  private def freshTable(t: String): String = {
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val wh = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir"), t)
+    wh.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(wh, true)
+    t
+  }
+
+  test("a stale index never drops rows: EXCHANGE TABLES swaps the data under it") {
+    val ch = graft.sql.ClickHouseSql
+    val Seq(xa, xb) = Seq("graft_xchg_xa", "graft_xchg_xb").map(freshTable)
+    try {
+      Seq(xa, xb).foreach(t =>
+        ch.sql(spark, s"CREATE TABLE $t (k Int64) ENGINE = MergeTree ORDER BY k"))
+      ch.sql(spark, s"INSERT INTO $xa SELECT id FROM range(0, 20)")
+      ch.sql(spark, s"INSERT INTO $xb SELECT id FROM range(100, 120)")
+      ch.sql(spark, s"ALTER TABLE $xa ADD INDEX ik k TYPE minmax")
+      ch.sql(spark, s"EXCHANGE TABLES $xa AND $xb")
+      // the index covers the files that moved out of xa's dir, none of the
+      // files that moved in
+      assert(ch.sql(spark, s"SELECT count() FROM $xa WHERE k >= 105")
+        .head().getLong(0) == 15)
+      assert(ch.sql(spark, s"SELECT count() FROM $xb WHERE k >= 5")
+        .head().getLong(0) == 15)
+    } finally {
+      ch.sql(spark, s"ALTER TABLE $xa DROP INDEX ik")
+      Seq(xa, xb).foreach(freshTable)
+    }
+  }
+
+  test("differential write sequence: indexed answers equal unindexed, probes run no job") {
+    val ch = graft.sql.ClickHouseSql
+    val Seq(ix, plain) = Seq("graft_idx_diff", "graft_idx_diff_plain").map(freshTable)
+    def both(stmt: String => String): Seq[Launched] =
+      Seq(ix, plain).map(t => launchedBy(spark)(ch.sql(spark, stmt(t))))
+    def rows(q: String) = ch.sql(spark, q).collect().map(_.toString).toSeq
+    val checks = Seq[String => String](
+      t => s"SELECT k, g, v FROM $t WHERE k >= 150 AND k < 1500 ORDER BY k, g, v",
+      t => s"SELECT k, g, v FROM $t WHERE k = 1003 ORDER BY k, g, v",
+      t => s"SELECT k, g, v FROM $t WHERE v IN (7, 8, 103, 108) ORDER BY k, g, v",
+      t => s"SELECT k, g, v FROM $t WHERE k < 40 OR v = 9 ORDER BY k, g, v")
+    def verify(step: String, prunes: Boolean = false): Unit = {
+      checks.foreach { q =>
+        assert(rows(q(ix)) == rows(q(plain)), s"after $step: ${q(ix)}")
+      }
+      // the range and membership probes read driver-resident summaries
+      graft.plans.SkipIndexPruning.clearDecisions()
+      assert(jobsDuring(spark) {
+        ch.sql(spark, checks.head(ix)).queryExecution.optimizedPlan
+        ch.sql(spark, checks(2)(ix)).queryExecution.optimizedPlan
+      } == 0, s"after $step: a pruning probe launched a job")
+      val ds = graft.plans.SkipIndexPruning.lastDecisions
+      assert(ds.map(_.kind).toSet == Set("minmax", "set"),
+        s"after $step: the rule did not probe both indexes")
+      if (prunes) assert(ds.exists(d => d.admitted < d.total),
+        s"after $step: nothing pruned: $ds")
+    }
+    try {
+      Seq(ix, plain).foreach(t => ch.sql(spark,
+        s"CREATE TABLE $t (k Int64, v Int64, g String) ENGINE = MergeTree " +
+          "PARTITION BY g ORDER BY k"))
+      both(t => s"INSERT INTO $t SELECT id, id % 50, CASE WHEN id < 100 THEN 'a' " +
+        "WHEN id < 200 THEN 'b' ELSE 'c' END FROM range(0, 300)")
+      ch.sql(spark, s"ALTER TABLE $ix ADD INDEX mk k TYPE minmax")
+      ch.sql(spark, s"ALTER TABLE $ix ADD INDEX sv v TYPE set(100)")
+      verify("ADD INDEX", prunes = true)
+      // the refresh after an INSERT aggregates the inserted rows only:
+      // each of the two indexes reads exactly those rows once
+      val values = "(1000, 7, 'a'), (1003, 8, 'b'), (1003, 8, 'b'), (1002, 9, 'c')"
+      val Seq(iv, pv) = both(t => s"INSERT INTO $t VALUES $values")
+      assert(iv.recordsRead - pv.recordsRead == 2 * 4, s"INSERT VALUES: $iv vs $pv")
+      verify("INSERT VALUES")
+      val Seq(is, ps) = both(t =>
+        s"INSERT INTO $t SELECT id + 2000, id % 7, 'b' FROM range(0, 40)")
+      assert(is.recordsRead - ps.recordsRead == 2 * 40, s"INSERT SELECT: $is vs $ps")
+      verify("INSERT SELECT")
+      both(t => s"ALTER TABLE $t UPDATE v = v + 100 WHERE k % 10 = 3")
+      verify("ALTER UPDATE")
+      both(t => s"ALTER TABLE $t DELETE WHERE k % 7 = 0")
+      verify("ALTER DELETE")
+      both(t => s"OPTIMIZE TABLE $t FINAL DEDUPLICATE")
+      assert(rows(s"SELECT count() FROM $ix WHERE k = 1003") == Seq("[1]"))
+      verify("OPTIMIZE DEDUPLICATE")
+      both(t => s"ALTER TABLE $t DROP PARTITION 'b'")
+      verify("DROP PARTITION")
+    } finally {
+      Seq("mk", "sv").foreach(i => ch.sql(spark, s"ALTER TABLE $ix DROP INDEX $i"))
+      Seq(ix, plain).foreach(freshTable)
+    }
+  }
 }

@@ -48,39 +48,6 @@ class TablesSchemaSpec extends SparkFunSuite {
     assert(spark.table("nation").count() > 0)
   }
 
-  /** Jobs launched by `body` on this thread: the job group tags them, and a
-    * sentinel job run last proves the listener has seen every earlier one. */
-  private def jobsDuring(session: org.apache.spark.sql.SparkSession)(
-      body: => Unit): Int = {
-    import org.apache.spark.scheduler._
-    val sc = session.sparkContext
-    val group = s"tables-spec-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = e.properties
-        if (p != null && p.getProperty("spark.jobGroup.id") == group) {
-          if (p.getProperty("spark.job.description") == "sentinel") done.countDown()
-          else jobs.incrementAndGet()
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "tables spec")
-      body
-      sc.setJobDescription("sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a warm load in the same session launches no job") {
     Tables.load(spark, sf, "lineitem")
     var df: org.apache.spark.sql.DataFrame = null
