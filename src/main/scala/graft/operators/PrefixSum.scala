@@ -72,6 +72,19 @@ object PrefixSum {
     (withB, b, offsets)
   }
 
+  /** Left-joins the broadcast per-(bucket, p) offsets (`__off`, `__n`) on
+    * null-safe keys: a USING join drops a NULL partition key's carry-in
+    * and row count. */
+  private def withOffsets(df: DataFrame, offsets: DataFrame,
+      partCols: Seq[String]): DataFrame = {
+    val keys = "__bucket" +: partCols
+    val o = offsets.select(
+      keys.map(c => col(c).as(s"__o_$c")) :+ col("__off") :+ col("__n"): _*)
+    df.join(broadcast(o),
+        keys.map(c => col(c) <=> col(s"__o_$c")).reduce(_ && _), "left")
+      .drop(keys.map(c => s"__o_$c"): _*)
+  }
+
   /** Running sum: SUM(value) OVER (PARTITION BY partCols ORDER BY orderCols
     * ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), distributed over
     * `buckets` range chunks of the (non-null numeric) leading order key.
@@ -88,9 +101,8 @@ object PrefixSum {
     val grp = b +: partCols.map(col)
     val local = Window.partitionBy(grp: _*).orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    withB
-      .withColumn("__loc", sum(value).over(local))
-      .join(broadcast(offsets), "__bucket" +: partCols, "left")
+    withOffsets(withB.withColumn("__loc", sum(value).over(local)),
+        offsets, partCols)
       .withColumn(out, col("__loc") + coalesce(col("__off"), lit(0)))
       .drop("__bucket", "__loc", "__off", "__n")
   }
@@ -147,14 +159,14 @@ object PrefixSum {
     // the emit branch both read the materialized rows instead of re-running
     // the sort — and the checkpoint preserves partition contents and index
     // order, which the emit relies on.
-    val main = withB
+    val windowed = withB
       .repartitionByRange(shufP, b)
       .withColumn("__loc", sum(value)
         .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .withColumn("__movloc", sum(value)
         .over(w.rowsBetween(-(k - 1), Window.currentRow)))
       .withColumn("__rn", row_number().over(w))
-      .join(broadcast(offsets), "__bucket" +: partCols, "left")
+    val main = withOffsets(windowed, offsets, partCols)
       .withColumn(runOut, col("__loc") + coalesce(col("__off"), lit(0)))
       // project the spent intermediates away BEFORE materializing: the
       // checkpoint blocks carry only what the edge branch and the emit

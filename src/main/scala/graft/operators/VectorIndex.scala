@@ -240,11 +240,11 @@ object VectorIndex {
     * new vectors with no rebuild. Returns the running query (AvailableNow
     * trigger drains a bounded backlog). */
   def appendStream(spark: SparkSession, stream: DataFrame, indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointLocation: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val cents = readCents(spark, indexDir)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         withCell(prep(batch), cents)
           .select(col("vec_id"), col("v"), col("nrm"), col("cell"))

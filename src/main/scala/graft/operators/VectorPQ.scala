@@ -359,12 +359,12 @@ object VectorPQ {
     * retrain, no rebuild. Queries issued after a batch see the new
     * vectors. */
   def appendStream(spark: SparkSession, stream: DataFrame, indexDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointLocation: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val cents = VectorIndex.readCents(spark, indexDir)
     val cb = readCodebooks(spark, indexDir)
     stream.writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val assigned = VectorIndex.withCell(VectorIndex.prep(batch), cents)
         val encoded =

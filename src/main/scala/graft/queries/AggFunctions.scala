@@ -127,19 +127,17 @@ object AggFunctions extends QueryPack {
       // (flag|which, v) rows so the operator's stats/histogram/collect
       // jobs run once, not once per column (measured: two separate calls
       // cost ~0.5s more in job overhead at sf0.1)
-      // lineageCut with no checkpoint dir = localCheckpoint: the
-      // operator's few passes read materialized blocks, not re-scans.
-      // Blocks live on executors, so a lost executor fails the query;
-      // Components.lineageCut's reliable-dir lane would survive that, but
-      // no caller configures a dir today
-      val base = graft.operators.Components.lineageCut(
-        graft.operators.ScaleOps.fanOutIfTiny(
-            Tables.load(s, dir, "lineitem"), col("l_orderkey"))
-          .selectExpr("l_returnflag",
-            "stack(2, 'q', CAST(l_quantity AS DOUBLE), " +
-              "'p', CAST(l_extendedprice AS DOUBLE)) AS (which, v)")
-          .select(concat(col("l_returnflag"), lit("|"), col("which")).as("gk"),
-            col("v")))
+      // localCheckpoint: the operator's few passes read materialized
+      // blocks, not re-scans. Blocks live on executors, so a lost
+      // executor fails the query.
+      val base = graft.operators.ScaleOps.fanOutIfTiny(
+          Tables.load(s, dir, "lineitem"), col("l_orderkey"))
+        .selectExpr("l_returnflag",
+          "stack(2, 'q', CAST(l_quantity AS DOUBLE), " +
+            "'p', CAST(l_extendedprice AS DOUBLE)) AS (which, v)")
+        .select(concat(col("l_returnflag"), lit("|"), col("which")).as("gk"),
+          col("v"))
+        .localCheckpoint()
       val pcts = Seq(0.25, 0.5, 0.75, 0.9)
       val all = graft.operators.ExactQuantiles.groupPercentiles(
         base, "gk", "v", pcts)

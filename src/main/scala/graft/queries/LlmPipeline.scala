@@ -357,6 +357,32 @@ object LlmPipeline extends QueryPack {
       .select("id_a", "id_b", "dist")
   }
 
+  /** Exact word-set Jaccard >= 0.8 pairs within (lang, source) blocks:
+    * (id_a < id_b, jac). The stage every dedup query here funnels into.
+    * Explicit (lang, source) fan-out before the blocked self-join: the
+    * single-file scan is one input split, and without it the interpreted
+    * jaccard probes that split on one core (measured 45 s median vs 3.8 s
+    * min at sf0.1 — AQE replans the broadcast direction run to run); the
+    * ~100 blocks bound useful parallelism, not the byte size AQE sees. */
+  private def blockedJaccardPairs(docs: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val d = docs
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism,
+        col("lang"), col("source"))
+      .select(col("doc_id"), col("lang"), col("source"),
+        wordSet(col("text")).as("ws"))
+    val a = d.select(col("doc_id").as("id_a"), col("lang"), col("source"),
+      col("ws").as("wa"))
+    val b = d.select(col("doc_id").as("id_b"), col("lang"), col("source"),
+      col("ws").as("wb"))
+    a.join(b.hint("merge"), Seq("lang", "source"))
+      .filter(col("id_a") < col("id_b"))
+      .filter(jaccardLengthOk(col("wa"), col("wb"), 0.8))
+      .withColumn("jac", jaccard(col("wa"), col("wb")))
+      .filter(col("jac") >= 0.8)
+      .select(col("id_a"), col("id_b"), col("jac"))
+  }
+
   override def queries: Seq[Q] = Seq(
 
     // --- Dedup: exact (hash groupBy) ---------------------------------
@@ -390,22 +416,7 @@ object LlmPipeline extends QueryPack {
       WHERE CAST(LEN(LIST_INTERSECT(a.ws, b.ws)) AS DOUBLE)
             / LEN(LIST_DISTINCT(LIST_CONCAT(a.ws, b.ws))) >= 0.8
       ORDER BY id_a, id_b""") { (s, dir) =>
-      // Explicit (lang, source) fan-out before the blocked self-join: the
-      // single-file scan is one input split, and a broadcast self-join
-      // would run every interpreted jaccard on one core (the block count
-      // ~100 bounds useful parallelism, not the byte size AQE sees).
-      val d = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism,
-          col("lang"), col("source"))
-        .select(col("doc_id"), col("lang"), col("source"),
-          wordSet(col("text")).as("ws"))
-      val a = d.select(col("doc_id").as("id_a"), col("lang"), col("source"), col("ws").as("wa"))
-      val b = d.select(col("doc_id").as("id_b"), col("lang"), col("source"), col("ws").as("wb"))
-      a.join(b.hint("merge"), Seq("lang", "source"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(jaccardLengthOk(col("wa"), col("wb"), 0.8))
-        .withColumn("jac", jaccard(col("wa"), col("wb")))
-        .filter(col("jac") >= 0.8)
+      blockedJaccardPairs(Tables.load(s, dir, "documents"))
         .select(col("id_a"), col("id_b"), round(col("jac"), 6).as("jac"))
         .orderBy("id_a", "id_b")
     },
@@ -441,9 +452,8 @@ object LlmPipeline extends QueryPack {
       // (the lineage cut is eager) so the shingle cache can be RELEASED
       // before returning (round-3 verdict #5: a lazily-returned plan
       // would pin the cached shingle table in executor memory for the
-      // life of the session). lineageCut carries the round-13 durable
-      // option for a real cluster (localCheckpoint locally).
-      val out = graft.operators.Components.lineageCut(pairs)
+      // life of the session).
+      val out = pairs.localCheckpoint()
       docs.unpersist()
       out
     },
@@ -462,10 +472,11 @@ object LlmPipeline extends QueryPack {
       val planted = src.filter(col("doc_id") < 200)
         .withColumn("doc_id", col("doc_id") + 1000000L)
       val (docs, pairs) = minhashLshPairs(src.unionByName(planted))
-      val out = graft.operators.Components.lineageCut(pairs
+      val out = pairs
         .filter(col("id_b") === col("id_a") + 1000000L && col("id_a") < 200)
         .select(col("id_a").as("doc_id"), lit(true).as("found"))
-        .orderBy("doc_id"))
+        .orderBy("doc_id")
+        .localCheckpoint()
       docs.unpersist()
       out
     },
@@ -1014,30 +1025,10 @@ object LlmPipeline extends QueryPack {
       SELECT doc_id, component,
         CAST(doc_id = component AS BOOLEAN) AS is_canonical
       FROM comp ORDER BY doc_id""") { (s, dir) =>
-      // Same explicit fan-out as q_dedup_jaccard_exact: without it the
-      // blocked self-join probes the single input split on one core
-      // (measured 45s median vs 3.8s min at sf0.1 — AQE replans the
-      // broadcast direction run to run).
-      val d = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism,
-          col("lang"), col("source"))
-        .select(col("doc_id"), col("lang"), col("source"),
-          wordSet(col("text")).as("ws"))
-      val a = d.select(col("doc_id").as("id_a"), col("lang"), col("source"),
-        col("ws").as("wa"))
-      val b = d.select(col("doc_id").as("id_b"), col("lang"), col("source"),
-        col("ws").as("wb"))
-      val pairs = a.join(b.hint("merge"), Seq("lang", "source"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(jaccardLengthOk(col("wa"), col("wb"), 0.8))
-        .filter(jaccard(col("wa"), col("wb")) >= 0.8)
-        .select(col("id_a"), col("id_b"))
-      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      // ADAPTIVE algorithm choice (round 7): a skew probe picks star
-      // contraction for giant components / long chains, min-label
-      // propagation otherwise — this corpus's tiny clusters take the
-      // propagation path, so the oracle and plan are unchanged.
-      graft.operators.Components.connectedComponentsAuto(edges)
+      // every corpus graph is far below the driver edge cap, so this
+      // runs the union-find lane
+      graft.operators.Components.connectedComponents(
+          blockedJaccardPairs(Tables.load(s, dir, "documents")), "id_a", "id_b")
         .select(col("doc_id"), col("label").as("component"),
           (col("doc_id") === col("label")).as("is_canonical"))
         .orderBy("doc_id")
@@ -1069,22 +1060,8 @@ object LlmPipeline extends QueryPack {
       SELECT doc_id, component,
         CAST(doc_id = component AS BOOLEAN) AS is_canonical
       FROM comp ORDER BY doc_id""") { (s, dir) =>
-      val d = Tables.load(s, dir, "documents")
-        .repartition(s.sparkContext.defaultParallelism,
-          col("lang"), col("source"))
-        .select(col("doc_id"), col("lang"), col("source"),
-          wordSet(col("text")).as("ws"))
-      val a = d.select(col("doc_id").as("id_a"), col("lang"), col("source"),
-        col("ws").as("wa"))
-      val b = d.select(col("doc_id").as("id_b"), col("lang"), col("source"),
-        col("ws").as("wb"))
-      val pairs = a.join(b.hint("merge"), Seq("lang", "source"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(jaccardLengthOk(col("wa"), col("wb"), 0.8))
-        .filter(jaccard(col("wa"), col("wb")) >= 0.8)
-        .select(col("id_a"), col("id_b"))
-      val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      graft.operators.Components.connectedComponentsStar(edges)
+      graft.operators.Components.connectedComponentsStar(
+          blockedJaccardPairs(Tables.load(s, dir, "documents")), "id_a", "id_b")
         .select(col("doc_id"), col("label").as("component"),
           (col("doc_id") === col("label")).as("is_canonical"))
         .orderBy("doc_id")
@@ -1125,22 +1102,8 @@ object LlmPipeline extends QueryPack {
         CAST(MAX(CASE WHEN rn = 1 THEN n_chars END) AS BIGINT) AS rep_n_chars
       FROM m GROUP BY component ORDER BY component""") { (s, dir) =>
       val docs = Tables.load(s, dir, "documents")
-      val d = docs
-        .repartition(s.sparkContext.defaultParallelism,
-          col("lang"), col("source"))
-        .select(col("doc_id"), col("lang"), col("source"),
-          wordSet(col("text")).as("ws"))
-      val a = d.select(col("doc_id").as("id_a"), col("lang"), col("source"),
-        col("ws").as("wa"))
-      val b = d.select(col("doc_id").as("id_b"), col("lang"), col("source"),
-        col("ws").as("wb"))
-      val pairs = a.join(b.hint("merge"), Seq("lang", "source"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(jaccardLengthOk(col("wa"), col("wb"), 0.8))
-        .filter(jaccard(col("wa"), col("wb")) >= 0.8)
-        .select(col("id_a"), col("id_b"))
       val comp = graft.operators.Components.connectedComponents(
-        pairs.select(col("id_a").as("src"), col("id_b").as("dst")))
+          blockedJaccardPairs(docs), "id_a", "id_b")
         .select(col("doc_id"), col("label").as("component"))
       val w = Window.partitionBy(col("component"))
         .orderBy(col("n_chars").desc, col("doc_id"))

@@ -60,22 +60,8 @@ object ChFunctionRegistry {
     "toint64orzero" -> (args =>
       Coalesce(Seq(Cast(args.head, LongType, None, EvalMode.TRY), Literal(0L)))),
 
-    // arithmetic names (plus.cpp, minus.cpp, ...)
-    "plus" -> (args => Add(args(0), args(1))),
-    "minus" -> (args => Subtract(args(0), args(1))),
-    "multiply" -> (args => Multiply(args(0), args(1))),
-    "divide" -> (args => Divide(Cast(args(0), DoubleType), Cast(args(1), DoubleType))),
-    "intdiv" -> (args => IntegralDivide(args(0), args(1))),
-    "modulo" -> (args => Remainder(args(0), args(1))),
-    "negate" -> (args => UnaryMinus(args.head)),
-
-    // comparison/logic names
-    "equals" -> (args => EqualTo(args(0), args(1))),
-    "notequals" -> (args => Not(EqualTo(args(0), args(1)))),
-    "greater" -> (args => GreaterThan(args(0), args(1))),
-    "less" -> (args => LessThan(args(0), args(1))),
-    "greaterorequals" -> (args => GreaterThanOrEqual(args(0), args(1))),
-    "lessorequals" -> (args => LessThanOrEqual(args(0), args(1))),
+    // arithmetic and comparison names (plus.cpp, equals.cpp, ...) live in
+    // ChRegistryWide, which also covers the 128/256-bit integer types.
 
     // conditionals (if.cpp, multiIf.cpp, ifNull.cpp, nullIf.cpp)
     "multiif" -> (args => {
@@ -208,12 +194,9 @@ object ChFunctionRegistry {
     "fromunixtimestamp" -> (args => SecondsToTimestamp(args.head)),
 
     // hashing/encoding (FunctionsHashing.h). cityHash64 stays a
-    // name-only stand-in (values are ours); sipHash64/halfMD5 moved to
-    // ChRegistryTail7 as REAL published-algorithm implementations
-    // (the round-10 sweep upgrade — Tail7 wins the merge).
+    // name-only stand-in (values are ours); sipHash64/halfMD5 live in
+    // ChRegistryTail7 as the published algorithms.
     "cityhash64" -> (args => XxHash64(args, 42L)),
-    "siphash64" -> (args => XxHash64(args, 42L)),
-    "halfmd5" -> (args => XxHash64(args, 42L)),
     "hex" -> (args => Hex(args.head)),
     "unhex" -> (args => Unhex(args.head)),
     "base64encode" -> (args => Base64(Cast(args.head, BinaryType))),
@@ -229,8 +212,6 @@ object ChFunctionRegistry {
     "intexp2" -> (args => Cast(Pow(Literal(2.0), Cast(args.head, DoubleType)), LongType)),
     "intexp10" -> (args => Cast(Pow(Literal(10.0), Cast(args.head, DoubleType)), LongType)),
     "cbrt" -> (args => Cbrt(args.head)),
-    "roundtoexp2" -> (args => Cast(Pow(Literal(2.0),
-      Floor(Log2(Cast(args.head, DoubleType)))), LongType)),
 
     // arrays (src/Functions/array)
     "has" -> (args => ArrayContains(args(0), args(1))),
@@ -300,10 +281,6 @@ object ChFunctionRegistry {
         If(GreaterThanOrEqual(x, Literal(lo)), Literal(out), acc)
       }
     }),
-    // string distances (stringDistance.cpp)
-    "levenshteindistance" -> (args => Levenshtein(args(0), args(1))),
-    "editdistance" -> (args => Levenshtein(args(0), args(1))),
-
     // introspection (src/Functions/registerFunctionsIntrospection.cpp,
     // bar.cpp). `version` is NOT registered (Spark builtin, pinned
     // skip-list in ChRegistrySpec); `bar` renders a 1/8-block proportional

@@ -214,12 +214,6 @@ object ChRegistryExt {
     // min2/max2 return Float64 (src/Functions/minus… min2.cpp)
     "min2" -> (args => Least(Seq(asDouble(args(0)), asDouble(args(1))))),
     "max2" -> (args => Greatest(Seq(asDouble(args(0)), asDouble(args(1))))),
-    "intdivorzero" -> (args =>
-      If(EqualTo(asLong(args(1)), Literal(0L)), Literal(0L),
-        IntegralDivide(args(0), args(1)))),
-    "moduloorzero" -> (args =>
-      If(EqualTo(asLong(args(1)), Literal(0L)), Literal(0),
-        Remainder(args(0), args(1)))),
     "divideornull" -> (args =>
       If(EqualTo(asDouble(args(1)), Literal(0.0d)),
         Literal.create(null, DoubleType),
@@ -326,13 +320,6 @@ object ChRegistryExt {
         ZipWith(chars(args(0)), chars(args(1)),
           lam2((x, y) => If(EqualNullSafe(x, y), Literal(0), Literal(1)))),
         Literal(0), lam2(Add(_, _)), LambdaFunction.identity)),
-    "stringjaccardindex" -> (args => {
-      val a = ArrayDistinct(chars(args(0)))
-      val b = ArrayDistinct(chars(args(1)))
-      val un = Size(ArrayUnion(a, b))
-      If(LessThanOrEqual(un, Literal(0)), Literal(1.0d),
-        Divide(Cast(Size(ArrayIntersect(a, b)), DoubleType), Cast(un, DoubleType)))
-    }),
 
     // ---- n-gram similarity (FunctionsStringSimilarity.h; DISTINCT-set
     // variant of the reference's multiset counts — same [0,1] range and

@@ -12,11 +12,11 @@ import org.apache.spark.sql.types._
   * formatDateTime/parseDateTime translation, best-effort timestamp
   * parsing, 64-bit unix-timestamp codecs, MAC/IPv4 codecs, XML/HTML
   * codecs, formatReadable* rendering, decimal arithmetic with explicit
-  * scale, gcd/lcm via BigInteger (codegen'd object calls), and map-sort.
+  * scale, and map-sort.
   *
   * Reference: src/Functions/FunctionsStringSimilarity.cpp,
   * MultiSearchAllPositions.h, formatDateTime.cpp, parseDateTimeBestEffort
-  * .cpp, FunctionsCodingIP.cpp, formatReadable.h, gcd.cpp. */
+  * .cpp, FunctionsCodingIP.cpp, formatReadable.h. */
 object ChRegistryMisc {
 
   private val nameSeq = new AtomicInteger(0)
@@ -123,18 +123,6 @@ object ChRegistryMisc {
     Concat(Seq(Cast(n, StringType), Literal(" " + word),
       If(EqualTo(n, Literal(1L)), Literal(""), Literal("s"))))
 
-  // ---- BigInteger gcd (gcd.cpp) — codegen'd object-call chain ---------
-
-  private val bigIntType = ObjectType(classOf[java.math.BigInteger])
-
-  private def bigInt(e: Expression): Expression =
-    StaticInvoke(classOf[java.math.BigInteger], bigIntType, "valueOf",
-      Seq(asLong(e)), Seq(LongType))
-
-  private def gcdExpr(a: Expression, b: Expression): Expression =
-    Invoke(Invoke(bigInt(a), "gcd", bigIntType, Seq(bigInt(b))),
-      "longValueExact", LongType)
-
   // ---- commons-math3 specials (erf.cpp … lgamma via libm) -------------
 
   private def m3(cls: Class[_], fn: String)(e: Expression): Expression =
@@ -178,11 +166,9 @@ object ChRegistryMisc {
     "countsubstringscaseinsensitiveutf8" -> delegate("countsubstringscaseinsensitive"),
     "countmatchescaseinsensitive" -> (args =>
       RegExpCount(Lower(args(0)), Lower(args(1)))),
-    "editdistanceutf8" -> (args => Levenshtein(args(0), args(1))),
     "levenshteindistanceutf8" -> (args => Levenshtein(args(0), args(1))),
     "initcaputf8" -> (args => InitCap(args.head)),
     "mismatches" -> delegate("bytehammingdistance"),
-    "stringjaccardindexutf8" -> delegate("stringjaccardindex"),
     "ngramdistanceutf8" -> delegate("ngramdistance"),
     "ngramdistancecaseinsensitive" -> delegateLower("ngramdistance"),
     "ngramdistancecaseinsensitiveutf8" -> delegateLower("ngramdistance"),
@@ -252,26 +238,12 @@ object ChRegistryMisc {
       }
       RegExpExtractAll(args(0), args(1), Literal(group))
     }),
-    "extractgroups" -> (args => args(1) match {
-      case Literal(s, StringType) =>
-        val groups = s.toString.count(_ == '(') max 1
-        CreateArray((1 to groups).map(i =>
-          RegExpExtract(args(0), args(1), Literal(i))))
-      case _ => throw new IllegalArgumentException(
-        "extractGroups expects a literal pattern")
-    }),
 
     // ---- special math via commons-math3 (ships with Spark) ----
     "erf" -> (args => m3(erfCls, "erf")(args.head)),
     "erfc" -> (args => m3(erfCls, "erfc")(args.head)),
     "lgamma" -> (args => m3(gammaCls, "logGamma")(args.head)),
     "tgamma" -> (args => m3(gammaCls, "gamma")(args.head)),
-    "gcd" -> (args => gcdExpr(args(0), args(1))),
-    "lcm" -> (args =>
-      If(Or(EqualTo(asLong(args(0)), Literal(0L)), EqualTo(asLong(args(1)), Literal(0L))),
-        Literal(0L),
-        Abs(Multiply(IntegralDivide(asLong(args(0)), gcdExpr(args(0), args(1))),
-          asLong(args(1)))))),
     "byteswap" -> (args =>
       StaticInvoke(classOf[java.lang.Long], LongType, "reverseBytes",
         Seq(asLong(args.head)), Seq(LongType))),
@@ -324,7 +296,6 @@ object ChRegistryMisc {
       Coalesce(Seq(bestEffort(args.head),
         Cast(Literal("1970-01-01 00:00:00"), TimestampType)))),
     "parsedatetime32besteffort" -> (args => bestEffort(args.head)),
-    "parsedatetime64besteffort" -> (args => bestEffort(args.head)),
     "makedate" -> (args => MakeDate(args(0), args(1), args(2))),
     "makedate32" -> (args => MakeDate(args(0), args(1), args(2))),
     "makedatetime" -> (args =>

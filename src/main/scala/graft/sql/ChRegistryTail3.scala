@@ -143,7 +143,6 @@ object ChRegistryTail3 {
 
     // ---- server/block introspection (serverConstants.cpp,
     //      blockNumber.cpp, rowNumberInBlock.cpp) ------------------------
-    "currentuser" -> (_ => CurrentUser()),
     "hostname" -> (_ =>
       Literal(java.net.InetAddress.getLocalHost.getHostName)),
     // Spark's monotonically_increasing_id is (partitionId << 33 | record#)
@@ -274,8 +273,6 @@ object ChRegistryTail3 {
         Seq(args.head, argOr(args, 1, 3)), Seq(StringType, IntegerType)),
       StaticInvoke(hkCls, LongType, "wordShingleMinHashB",
         Seq(args.head, argOr(args, 1, 3)), Seq(StringType, IntegerType))))),
-    "siphash128" -> (args => StaticInvoke(hkCls, BinaryType, "hash128",
-      Seq(XxHash64(args, 42L), XxHash64(args, 7L)), Seq(LongType, LongType))),
     "bitslice" -> (args => StaticInvoke(hkCls, BinaryType, "bitSlice",
       Seq(Cast(args(0), BinaryType), Cast(args(1), IntegerType),
         Cast(args(2), IntegerType)),

@@ -320,10 +320,6 @@ object ChRegistryTail6 {
       ChRegistryMisc.builders("parsedatetimebesteffortornull"),
     "parsedatetime32besteffortorzero" ->
       ChRegistryMisc.builders("parsedatetimebesteffortorzero"),
-    "parsedatetime64besteffortornull" ->
-      ChRegistryMisc.builders("parsedatetimebesteffortornull"),
-    "parsedatetime64besteffortorzero" ->
-      ChRegistryMisc.builders("parsedatetimebesteffortorzero"),
     "parsedatetimebesteffortus" ->
       ChRegistryMisc.builders("parsedatetimebesteffort"),
     "parsedatetimebesteffortusornull" ->

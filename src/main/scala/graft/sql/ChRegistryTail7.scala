@@ -139,7 +139,7 @@ object ChRegistryTail7 {
       .filter(_.nonEmpty).getOrElse("default"))
 
   val builders: Map[String, Seq[Expression] => Expression] = Map(
-    // ---- SipHash family (REAL algorithm; overrides the stand-ins) ----
+    // ---- SipHash family (the published algorithm) ----
     "siphash64" -> (args => kernel(LongType, "sipHash64",
       Seq(bin(args.head)), Seq(BinaryType))),
     "siphash64keyed" -> (args =>

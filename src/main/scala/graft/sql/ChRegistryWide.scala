@@ -20,13 +20,12 @@ import org.apache.spark.sql.types._
   * toInt128OrNull(x) NULLs out-of-range input (accurateCastOrNull),
   * OrZero coalesces the OrNull form to '0'.
   *
-  * The arithmetic/comparison names REPLACE the always-numeric builders
-  * lower in the registry concat (ChFunctionRegistry core, ChRegistryExt
-  * orZero forms, ChRegistryMisc gcd/lcm) with WideBinaryArith /
-  * WideCompare / WideNegate — RuntimeReplaceable dispatchers that keep
-  * the EXACT former Catalyst trees for all-numeric children (zero
-  * regression for every green battery) and route string-carried wide
-  * integers to the kernels. See WideArithExpressions.scala.
+  * The arithmetic/comparison names (and intDivOrZero, moduloOrZero,
+  * gcd, lcm) are defined only here, as WideBinaryArith / WideCompare /
+  * WideNegate — RuntimeReplaceable dispatchers that build the plain
+  * numeric Catalyst trees for all-numeric children and route
+  * string-carried wide integers to the kernels. See
+  * WideArithExpressions.scala.
   */
 object ChRegistryWide {
 

@@ -137,10 +137,10 @@ object WindowView {
     * appended to a parquet target — the foreachBatch rendering of the
     * reference's per-INSERT-block MV pipeline. Returns the running query. */
   def materializedView(source: DataFrame, transform: DataFrame => DataFrame,
-      targetDir: String, checkpointDir: String): StreamingQuery =
+      targetDir: String, checkpointLocation: String): StreamingQuery =
     source.writeStream
       .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
+      .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         transform(batch).write.mode("append").parquet(targetDir)
       }

@@ -2,6 +2,7 @@ package graft
 
 import graft.sql.{ChFunctionRegistry, ClickHouseSql}
 import org.apache.spark.sql.Row
+import scala.jdk.CollectionConverters._
 
 /** De-shadowed registry invariants (round-2 VERDICT item 8):
   *   - install() must not replace ANY Spark built-in;
@@ -151,5 +152,32 @@ class ChRegistrySpec extends SparkFunSuite {
     assert(out.map(r => (r.getString(0), r.getLong(1),
       Option(r.get(2)).map(_.toString).orNull)).toSeq ==
       Seq(("a", 10L, "1.0"), ("a", 20L, "2.0"), ("b", 10L, null)))
+  }
+
+  test("no function name is defined twice, across packs or within one map") {
+    // `builders` joins the packs with ++ and a Map literal keeps the last
+    // of two equal keys, so a second definition of a name silently
+    // replaces the first and the loser is dead code. Neither join shows
+    // the loss at run time, so scan the pack sources for builder entries
+    // ("name" -> builder; type-name tables map to a string or a *Type, and
+    // struct field names are not registered names).
+    val dir = java.nio.file.Paths.get("src/main/scala/graft/sql")
+    val packFile = """(ChFunctionRegistry|ChRegistry\w*|Dictionaries)\.scala""".r
+    val files = {
+      val s = java.nio.file.Files.list(dir)
+      try s.iterator().asScala.toList finally s.close()
+    }.filter(f => packFile.matches(f.getFileName.toString))
+    val entry = "\"([a-z0-9_]+)\"\\s*->\\s*+(?!\"|[A-Z]\\w*Type\\b)".r
+    val registered = ChFunctionRegistry.builders.keySet
+    val defs = files.flatMap { f =>
+      entry.findAllMatchIn(java.nio.file.Files.readString(f))
+        .map(m => m.group(1) -> f.getFileName.toString)
+    }.filter { case (name, _) => registered(name) }
+    // the scan must see most of the surface, or it proves nothing
+    assert(defs.map(_._1).distinct.size > registered.size * 3 / 4,
+      s"scan found ${defs.size} entries for ${registered.size} names")
+    val twice = defs.groupBy(_._1).filter(_._2.size > 1).toSeq.sortBy(_._1)
+      .map { case (name, at) => s"$name: ${at.map(_._2).mkString(", ")}" }
+    if (twice.nonEmpty) fail("defined twice:\n" + twice.mkString("\n"))
   }
 }

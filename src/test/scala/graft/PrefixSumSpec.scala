@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.PrefixSum
@@ -81,6 +82,31 @@ class PrefixSumSpec extends SparkFunSuite {
         col("v"), frameRows = 5, "r", "m", buckets = 50)
       .select("k", "flag", "r", "m").orderBy("k").collect()
     assert(got.toSeq == expected.toSeq)
+  }
+
+  test("NULL partition keys spanning several buckets keep their carry") {
+    // a USING join on the offsets table drops a NULL key's carry-in and
+    // row count; every third row here has flag NULL, across all buckets
+    val s = spark
+    import s.implicits._
+    val df = (1 to 600).map { i =>
+      (i.toLong, if (i % 3 == 0) null else s"f${i % 2}",
+        BigDecimal((i * 37 % 500) + 1).setScale(2))
+    }.toDF("k", "flag", "v")
+    val wM = Window.partitionBy("flag").orderBy("k")
+      .rowsBetween(-4, Window.currentRow)
+    val expected = df
+      .withColumn("r", sum("v").over(naiveRun))
+      .withColumn("m", sum("v").over(wM))
+      .select("k", "flag", "r", "m").orderBy("k").collect().toSeq
+    val run = PrefixSum.runningSum(df, Seq("flag"), Seq(col("k")), "k",
+        col("v"), "r", buckets = 16)
+      .select("k", "flag", "r").orderBy("k").collect().toSeq
+    assert(run == expected.map(r => Row(r(0), r(1), r(2))))
+    val both = PrefixSum.runningAndMoving(df, Seq("flag"), Seq(col("k")),
+        "k", col("v"), frameRows = 5, "r", "m", buckets = 16)
+      .select("k", "flag", "r", "m").orderBy("k").collect().toSeq
+    assert(both == expected)
   }
 
   test("range-partitioned emit: partition order + local sort IS global order") {
